@@ -93,10 +93,9 @@ class CrawlConfig:
     max_tasks_per_core: int = 12
     # frontier delta log: full-snapshot compaction cadence (rounds)
     frontier_compact_every: int = 8
-    use_bloom: bool = True
     # "bloom" (operators/dedup.py) or "cuckoo" (operators/dedup_cuckoo.py,
     # deletable fingerprints — recrawl invalidation without state rebuild).
-    # Same three-name contract; semantics identical (exact-verified).
+    # Two codecs of one filter path; semantics identical (exact-verified).
     filter_kind: str = "bloom"
     bloom_parts: int = 64
     bloom_min_keys: int = 500_000  # below this the plain anti-join is cheaper
@@ -110,7 +109,7 @@ class CrawlConfig:
     partition_url_seen: bool = False
     seen_prune_min_keys: int = 100_000_000
     cache_web: bool = True
-    verify_rows: bool = True  # per-row decode+phash+PSNR gate (input_hint)
+    # per-row decode+phash+PSNR gate (input_hint):
     # "full" | "sample" | "off" — the 32-wide profile's dominant stage
     # is this gate; "sample" verifies a deterministic ~1/denom of rows
     # (NULL elsewhere) for scale deployments, "full" stays the default
@@ -349,16 +348,15 @@ class CrawlEngine:
         # last; written once below (no persist — single consumer), row
         # count derived from the fetch stats (sum of listing sizes)
         results = FE.extract_results(ok, self.web_images, round_no)
-        if cfg.verify_rows:
-            # input_hint per-row gate: decode, PSNR vs reference pixels,
-            # phash recompute — the dominant (and embarrassingly
-            # parallel) compute of a real image crawl
-            results = FE.verify_rows(
-                results,
-                cfg.image_seed,
-                policy=cfg.verify_policy,
-                sample_denom=cfg.verify_sample_denom,
-            )
+        # input_hint per-row gate: decode, PSNR vs reference pixels,
+        # phash recompute — the dominant (and embarrassingly parallel)
+        # compute of a real image crawl
+        results = FE.verify_rows(
+            results,
+            cfg.image_seed,
+            policy=cfg.verify_policy,
+            sample_denom=cfg.verify_sample_denom,
+        )
 
         # expansion: successfully fetched SEED pages (page==0) discover pagination
         expansion = R.tag_robots(
@@ -405,9 +403,7 @@ class CrawlEngine:
             and int(stored_parts) == cfg.bloom_parts
             and stored_kind == cfg.filter_kind
         )
-        use_filters = (
-            cfg.use_bloom and seen_count_prev >= cfg.bloom_min_keys and state_valid
-        )
+        use_filters = seen_count_prev >= cfg.bloom_min_keys and state_valid
         if use_filters:
             # Blobs cover seen_prev only; this round's new_seen is checked
             # by a separate exact delta anti-join (see dedup.py docstring —
@@ -579,7 +575,7 @@ class CrawlEngine:
             writes.append(("frontier_add", demote, 1))
             writes.append(("frontier_del", dispatch.select("url_hash"), 1))
         wrote_filters = False
-        if cfg.use_bloom and (use_filters or seen_count_prev + n_ok >= cfg.bloom_min_keys):
+        if use_filters or seen_count_prev + n_ok >= cfg.bloom_min_keys:
             # maintain the state from the crossing round on (first update
             # folds the whole seen set once; after that only new keys).
             # use_filters=False here also covers the n_parts-mismatch

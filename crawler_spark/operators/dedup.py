@@ -1,21 +1,28 @@
-"""URL-seen dedup: partitioned Bloom prefilter + exact anti-join.
+"""URL-seen dedup: partitioned filter prefilter + exact anti-join.
 
 Semantics = the reference's ``INSERT ... ON CONFLICT DO NOTHING``
 (commons/Entry.go:37): a candidate URL is dropped iff its canonical
 hash is already in the seen set.  Exactness is mandatory (north_rule:
-"identical URL-seen set"), so the Bloom filter is *only* a prefilter:
+"identical URL-seen set"), so the filter is *only* a prefilter:
 
-- candidates whose partition Bloom says "definitely new" skip the join
+- candidates whose partition filter says "definitely new" skip the join
   entirely (the overwhelming majority in a growing crawl);
 - the "maybe seen" remainder goes through an exact ``left_anti`` join.
 
 At 10^10 seen URLs the anti-join's build side is the bottleneck; the
 prefilter shrinks the probe set by orders of magnitude.  Filters are
-partitioned by ``pmod(url_hash, n_parts)`` so each blob stays small
-(bits sized for the partition's key count) and filter build is
-embarrassingly parallel (``applyInPandas`` per partition, numpy
-bitset).  Membership tests are Arrow-batched pandas UDFs over the
-broadcast blob dict — no per-row Python.
+partitioned by ``pmod(url_hash, n_parts)`` so each blob stays small and
+both fold and probe are embarrassingly parallel (``applyInPandas`` per
+partition, numpy kernels).  Blobs live on executors: never collected to
+the driver, never broadcast.
+
+This module holds the one filter path, written once for every filter
+kind: the state schema, the incremental cogroup fold, the cogroup
+probe, the seen-part pruning and the same-round-delta anti-join.  A
+filter kind is a :class:`Codec` of five small table functions; the
+Bloom codec lives here (``FILTER_STATE_SCHEMA``, ``update_seen_filters``,
+``anti_join_seen_partitioned`` and ``anti_join_seen_with_delta`` are
+bound to it), the cuckoo codec in ``dedup_cuckoo.py``.
 
 Spark's own runtime Bloom pushdown
 (``spark.sql.optimizer.runtime.bloomFilter.enabled``) covers the
@@ -28,7 +35,9 @@ pandas-UDF implementation.)
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -36,168 +45,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-BLOOM_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("filter", T.BinaryType(), False),
-        T.StructField("n_keys", T.LongType(), False),
-    ]
-)
-
-_K_HASHES = 5
-_BITS_PER_KEY = 10  # ~1% FPP at k=5
-
-
-def _bit_positions(hashes: np.ndarray, m_bits: int) -> Iterator[np.ndarray]:
-    """Double hashing: g_i(x) = h1 + i*h2 mod m (Kirsch-Mitzenmacher)."""
-    h = hashes.astype(np.uint64)
-    h1 = h % np.uint64(m_bits)
-    h2 = (h >> np.uint64(17) | np.uint64(1)) % np.uint64(m_bits)
-    for i in range(_K_HASHES):
-        yield ((h1 + np.uint64(i) * h2) % np.uint64(m_bits)).astype(np.int64)
-
-
-def _build_filter(hashes: np.ndarray, m_bits: int) -> bytes:
-    bits = np.zeros(m_bits, dtype=bool)
-    for pos in _bit_positions(hashes, m_bits):
-        bits[pos] = True
-    return np.packbits(bits).tobytes()
-
-
-def _test_filter(blob: bytes, hashes: np.ndarray) -> np.ndarray:
-    bits = np.unpackbits(np.frombuffer(blob, dtype=np.uint8))
-    m_bits = len(bits)
-    maybe = np.ones(len(hashes), dtype=bool)
-    for pos in _bit_positions(hashes, m_bits):
-        maybe &= bits[pos].astype(bool)
-    return maybe
-
-
-def part_id_col(url_hash, n_parts: int):
-    return F.pmod(F.col(url_hash) if isinstance(url_hash, str) else url_hash, F.lit(n_parts)).cast(
-        "int"
-    )
-
-
-def build_seen_filters(seen: DataFrame, n_parts: int = 64) -> DataFrame:
-    """Per-partition Bloom blobs over the full seen set (url_hash BIGINT)."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["part_id"].iloc[0])
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        m_bits = max(1024, 8 * ((len(h) * _BITS_PER_KEY + 7) // 8))
-        return pd.DataFrame(
-            {"part_id": [part], "filter": [_build_filter(h, m_bits)], "n_keys": [len(h)]}
-        )
-
-    return (
-        seen.select("url_hash")
-        .withColumn("part_id", part_id_col("url_hash", n_parts))
-        .groupBy("part_id")
-        .applyInPandas(build, schema=BLOOM_SCHEMA)
-    )
-
-
-# Above this many total filter bytes the collect+broadcast arm stops
-# being a bootstrap convenience and becomes a driver bottleneck (blob
-# dict on the driver + one broadcast per round).  64 MiB ≈ 50M keys at
-# _BITS_PER_KEY=10 — far beyond any bootstrap, far below driver memory.
-_BROADCAST_BLOBS_MAX_BYTES = 64 * 1024 * 1024
-
-
-def anti_join_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    filters: DataFrame | None = None,
-    n_parts: int = 64,
-    seen_count: int | None = None,
-) -> DataFrame:
-    """candidates \\ seen, by url_hash — exact, Bloom-prefiltered.
-
-    ``filters``: output of :func:`build_seen_filters` (or None → plain
-    anti-join).  The logical result is identical with or without the
-    prefilter (pinned in tests); only the join input size changes.
-
-    The collect+broadcast arm is GATED (VERDICT r3 item 6): when the
-    blobs would total more than ``_BROADCAST_BLOBS_MAX_BYTES`` the
-    probe is routed through the executor-side cogroup path
-    (:func:`anti_join_seen_partitioned`) instead, and no path ever
-    collects filter state to the driver at scale.  The gate estimates
-    blob bytes from the SEEN key count (build_seen_filters sizes blobs
-    as ``_BITS_PER_KEY`` per key, so the estimate is exact up to the
-    per-partition 1 KiB floor) — aggregating over ``filters`` itself
-    would EXECUTE the unpersisted applyInPandas build once for the
-    gate and again in whichever arm consumes it.
-
-    ``seen_count``: pass the seen-set cardinality when the caller
-    already tracks it (the engine's round stats do) so the gate does
-    not run a full Spark count over the largest table on every call;
-    only falls back to ``seen.count()`` when it is unavailable.
-    """
-    if filters is None:
-        return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
-
-    n_seen = seen_count if seen_count is not None else seen.count()
-    est_bytes = n_seen * _BITS_PER_KEY // 8 + n_parts * 128
-    if est_bytes > _BROADCAST_BLOBS_MAX_BYTES:
-        # adapt the one-epoch BLOOM_SCHEMA blobs to the partitioned
-        # state contract and probe them where they live
-        state = filters.select(
-            F.col("part_id").cast("int"),
-            F.lit(0).cast("int").alias("epoch"),
-            "filter",
-            F.col("n_keys").cast("long"),
-            F.col("n_keys").cast("long").alias("capacity"),
-            F.lit(n_parts).cast("int").alias("n_parts"),
-        )
-        return anti_join_seen_partitioned(candidates, seen, state, n_parts)
-
-    blobs = {r["part_id"]: bytes(r["filter"]) for r in filters.collect()}
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(blobs)
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(url_hash: pd.Series) -> pd.Series:
-        h = url_hash.to_numpy(dtype=np.int64)
-        parts = (h % n_parts + n_parts) % n_parts  # pmod
-        out = np.zeros(len(h), dtype=bool)
-        table = bc.value
-        for p in np.unique(parts):
-            blob = table.get(int(p))
-            if blob is None:
-                continue
-            m = parts == p
-            out[m] = _test_filter(blob, h[m])
-        return pd.Series(out)
-
-    flagged = candidates.withColumn("_maybe", maybe_seen(F.col("url_hash")))
-    definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    needs_check = flagged.filter(F.col("_maybe")).drop("_maybe")
-    checked = needs_check.join(seen.select("url_hash"), "url_hash", "left_anti")
-    return definitely_new.unionByName(checked)
-
-
-# =====================================================================
-# Incremental distributed filter state (the 10^10-scale path)
-# =====================================================================
-#
-# ``build_seen_filters`` rebuilds from the FULL seen set — O(|seen|)
-# per round, fine for bootstrap/backfill but wrong as a steady-state
-# plan at 10^10 keys.  The functions below maintain the filter state
-# incrementally and keep every blob on executors (never collected to
-# the driver, never broadcast):
-#
-# - state schema (part_id, epoch, filter, n_keys, capacity): one or
-#   more epoch-blobs per hash partition.  New keys OR into the newest
-#   epoch while capacity lasts; overflow appends a fresh epoch blob
-#   sized 2× the incoming batch (geometric growth ⇒ O(log) epochs,
-#   bounded FPP per epoch, no rebuilds ever).
-# - update = cogroup(prev_state, new_keys) by part_id → applyInPandas
-#   (numpy bitsets), embarrassingly parallel across partitions.
-# - membership = cogroup(candidates, state) by part_id →
-#   applyInPandas testing each candidate against the partition's
-#   epoch blobs; "maybe" survivors go through the exact anti-join.
-
+# Incremental distributed filter state: one or more epoch-blobs per
+# hash partition.  New keys fill the newest epoch while capacity lasts;
+# overflow appends a fresh epoch sized 2× the leftover batch (geometric
+# growth ⇒ O(log) epochs, bounded FPP per epoch, no rebuilds ever).
 FILTER_STATE_SCHEMA = T.StructType(
     [
         T.StructField("part_id", T.IntegerType(), False),
@@ -215,22 +66,102 @@ FILTER_STATE_SCHEMA = T.StructType(
     ]
 )
 
+_STATE_COLS = [f.name for f in FILTER_STATE_SCHEMA.fields]
 _MIN_CAPACITY = 4096
 
 
-def _set_bits(blob: bytearray, hashes: np.ndarray) -> None:
-    bits = np.unpackbits(np.frombuffer(bytes(blob), dtype=np.uint8))
+class Codec(NamedTuple):
+    """One filter kind: how a partition's epoch blob is built, read,
+    written, filled and probed.  ``insert`` mutates the table in place
+    and returns the mask of keys that did NOT fit (the fold opens a
+    fresh epoch for them); ``lookup`` returns the "maybe seen" mask."""
+
+    empty: Callable[[int], Any]
+    load: Callable[[bytes], Any]
+    dump: Callable[[Any], bytes]
+    insert: Callable[[Any, np.ndarray], np.ndarray]
+    lookup: Callable[[Any, np.ndarray], np.ndarray]
+
+
+# ------------------------------------------------------------ Bloom codec
+# A blob is a packbits bitset of 10 bits per key of epoch capacity,
+# probed at five double-hash positions (~1% FPP at full capacity).
+_K_HASHES = 5
+_BITS_PER_KEY = 10
+
+
+def _bit_positions(hashes: np.ndarray, m_bits: int) -> Iterator[np.ndarray]:
+    """Double hashing: g_i(x) = h1 + i*h2 mod m (Kirsch-Mitzenmacher)."""
+    h = hashes.astype(np.uint64)
+    h1 = h % np.uint64(m_bits)
+    h2 = (h >> np.uint64(17) | np.uint64(1)) % np.uint64(m_bits)
+    for i in range(_K_HASHES):
+        yield ((h1 + np.uint64(i) * h2) % np.uint64(m_bits)).astype(np.int64)
+
+
+def _bloom_insert(bits: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     for pos in _bit_positions(hashes, len(bits)):
         bits[pos] = 1
-    blob[:] = np.packbits(bits).tobytes()
+    return np.zeros(len(hashes), dtype=bool)  # a Bloom insert always fits
 
 
-def update_seen_filters(
+def _bloom_lookup(bits: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+    maybe = np.ones(len(hashes), dtype=bool)
+    for pos in _bit_positions(hashes, len(bits)):
+        maybe &= bits[pos].astype(bool)
+    return maybe
+
+
+BLOOM = Codec(
+    empty=lambda cap: np.zeros(8 * ((cap * _BITS_PER_KEY + 7) // 8), dtype=np.uint8),
+    load=lambda blob: np.unpackbits(np.frombuffer(blob, dtype=np.uint8)),
+    dump=lambda bits: np.packbits(bits).tobytes(),
+    insert=_bloom_insert,
+    lookup=_bloom_lookup,
+)
+
+
+# ------------------------------------------------------ shared filter path
+def part_id_col(url_hash, n_parts: int):
+    return F.pmod(F.col(url_hash) if isinstance(url_hash, str) else url_hash, F.lit(n_parts)).cast(
+        "int"
+    )
+
+
+def cogroup_state(
+    state: DataFrame,
+    keys: DataFrame,
+    n_parts: int,
+    step: Callable[[int, list, np.ndarray], list],
+) -> DataFrame:
+    """cogroup(state, keys) by part_id → new FILTER_STATE_SCHEMA state.
+    ``step(part, rows, hashes)`` gets the partition's epoch rows (oldest
+    first, as dicts) and its sorted ``url_hash`` keys, and returns the
+    partition's new rows.  Sorting makes the table bytes deterministic
+    for a given key set (checkpoint-resume byte-stability)."""
+
+    def apply(key, blobs: pd.DataFrame, ks: pd.DataFrame) -> pd.DataFrame:
+        rows = blobs.sort_values("epoch").to_dict("records") if len(blobs) else []
+        h = ks["url_hash"].to_numpy(dtype=np.int64) if len(ks) else np.array([], np.int64)
+        return pd.DataFrame(step(int(key[0]), rows, np.sort(h)), columns=_STATE_COLS)
+
+    keys_k = (
+        keys.select("url_hash")
+        .withColumn("part_id", part_id_col("url_hash", n_parts))
+        .groupBy("part_id")
+    )
+    return state.groupBy("part_id").cogroup(keys_k).applyInPandas(
+        apply, schema=FILTER_STATE_SCHEMA
+    )
+
+
+def fold_filter_state(
+    codec: Codec,
     filters_prev: DataFrame,
     new_seen: DataFrame,
     n_parts: int = 64,
 ) -> DataFrame:
-    """Fold this round's new keys into the filter state (see above).
+    """Fold this round's new keys into the filter state.
 
     ``filters_prev``: FILTER_STATE_SCHEMA rows (empty DataFrame on the
     first call).  ``new_seen``: DataFrame with a ``url_hash`` column.
@@ -242,39 +173,42 @@ def update_seen_filters(
     the FULL seen set on such rounds, so the rebuilt state is complete.
     """
 
-    def fold(key, blobs: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
-        part = int(key[0])
-        rows = blobs.sort_values("epoch").to_dict("records") if len(blobs) else []
-        h = keys["url_hash"].to_numpy(dtype=np.int64) if len(keys) else np.array([], np.int64)
-        if len(h):
-            if rows and rows[-1]["n_keys"] + len(h) <= rows[-1]["capacity"]:
-                cur = rows[-1]
-                blob = bytearray(bytes(cur["filter"]))
-                _set_bits(blob, h)
-                cur["filter"] = bytes(blob)
-                cur["n_keys"] = int(cur["n_keys"]) + len(h)
-            else:
-                cap = max(_MIN_CAPACITY, 2 * len(h))
-                m_bits = 8 * ((cap * _BITS_PER_KEY + 7) // 8)
-                rows.append(
-                    {
-                        "part_id": part,
-                        "epoch": (int(rows[-1]["epoch"]) + 1) if rows else 0,
-                        "filter": _build_filter(h, m_bits),
-                        "n_keys": len(h),
-                        "capacity": cap,
-                        "n_parts": n_parts,
-                    }
+    def fold(part: int, rows: list, pending: np.ndarray) -> list:
+        if len(pending) and rows:
+            cur = rows[-1]
+            room = int(cur["capacity"]) - int(cur["n_keys"])
+            if room > 0:
+                take, pending = pending[:room], pending[room:]
+                table = codec.load(cur["filter"])
+                left = codec.insert(table, take)
+                cur["filter"] = codec.dump(table)
+                cur["n_keys"] = int(cur["n_keys"]) + int((~left).sum())
+                if left.any():
+                    pending = np.concatenate([take[left], pending])
+        while len(pending):
+            cap = max(_MIN_CAPACITY, 2 * len(pending))
+            table = codec.empty(cap)
+            left = codec.insert(table, pending)
+            rows.append(
+                {
+                    "part_id": part,
+                    "epoch": (int(rows[-1]["epoch"]) + 1) if rows else 0,
+                    "filter": codec.dump(table),
+                    "n_keys": int((~left).sum()),
+                    "capacity": cap,
+                    "n_parts": n_parts,
+                }
+            )
+            if left.all():  # fresh 2×-sized epoch must make progress
+                raise RuntimeError(
+                    f"filter epoch insert made no progress (part {part}, "
+                    f"{len(pending)} keys, capacity {cap})"
                 )
-        return pd.DataFrame(rows, columns=[f.name for f in FILTER_STATE_SCHEMA.fields])
+            pending = pending[left]  # geometric epochs: terminates
+        return rows
 
-    prev_k = filters_prev.filter(F.col("n_parts") == F.lit(n_parts)).groupBy("part_id")
-    new_k = (
-        new_seen.select("url_hash")
-        .withColumn("part_id", part_id_col("url_hash", n_parts))
-        .groupBy("part_id")
-    )
-    return prev_k.cogroup(new_k).applyInPandas(fold, schema=FILTER_STATE_SCHEMA)
+    prev = filters_prev.filter(F.col("n_parts") == F.lit(n_parts))
+    return cogroup_state(prev, new_seen, n_parts, fold)
 
 
 def prune_seen_to_maybe_parts(
@@ -302,7 +236,8 @@ def prune_seen_to_maybe_parts(
     return seen.filter(F.col("seen_part").isin(parts))
 
 
-def anti_join_seen_partitioned(
+def probe_filter_state(
+    codec: Codec,
     candidates: DataFrame,
     seen: DataFrame,
     filters_state: DataFrame,
@@ -344,7 +279,7 @@ def anti_join_seen_partitioned(
         h = cands["url_hash"].to_numpy(dtype=np.int64)
         maybe = np.zeros(len(h), dtype=bool)
         for blob in blobs["filter"]:
-            maybe |= _test_filter(bytes(blob), h)
+            maybe |= codec.lookup(codec.load(blob), h)
         out["_maybe"] = maybe
         return out
 
@@ -379,7 +314,8 @@ def anti_join_seen_partitioned(
     return definitely_new.unionByName(checked)
 
 
-def anti_join_seen_with_delta(
+def probe_filter_state_with_delta(
+    codec: Codec,
     candidates: DataFrame,
     seen_prev: DataFrame,
     new_seen: DataFrame,
@@ -388,7 +324,7 @@ def anti_join_seen_with_delta(
     prune_seen_parts: bool = False,
     unpersist_into: list | None = None,
 ) -> DataFrame:
-    """candidates \\ (seen_prev ∪ new_seen), with the Bloom prefilter
+    """candidates \\ (seen_prev ∪ new_seen), with the filter prefilter
     applied ONLY to the part it actually covers.
 
     The persisted filter state covers keys through the PREVIOUS round;
@@ -401,8 +337,31 @@ def anti_join_seen_with_delta(
     delta (small; broadcast by AQE).  Result is exactly
     ``candidates \\ seen_all``.
     """
-    base = anti_join_seen_partitioned(
-        candidates, seen_prev, filters_state, n_parts, prune_seen_parts,
+    base = probe_filter_state(
+        codec, candidates, seen_prev, filters_state, n_parts, prune_seen_parts,
         unpersist_into=unpersist_into,
     )
     return base.join(new_seen.select("url_hash"), "url_hash", "left_anti")
+
+
+update_seen_filters = partial(fold_filter_state, BLOOM)
+anti_join_seen_partitioned = partial(probe_filter_state, BLOOM)
+anti_join_seen_with_delta = partial(probe_filter_state_with_delta, BLOOM)
+
+
+def anti_join_seen(
+    candidates: DataFrame,
+    seen: DataFrame,
+    filters: DataFrame | None = None,
+    n_parts: int = 64,
+) -> DataFrame:
+    """candidates \\ seen, by url_hash — exact.
+
+    ``filters``: Bloom FILTER_STATE_SCHEMA state (see
+    :func:`update_seen_filters`), probed by the partitioned path, or
+    None → plain ``left_anti`` join.  The logical result is identical
+    either way (pinned in tests); only the join input size changes.
+    """
+    if filters is None:
+        return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
+    return anti_join_seen_partitioned(candidates, seen, filters, n_parts)

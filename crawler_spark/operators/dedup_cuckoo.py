@@ -1,17 +1,19 @@
-"""URL-seen dedup: partitioned CUCKOO-filter prefilter + exact anti-join.
+"""URL-seen dedup: the CUCKOO-filter codec of the shared filter path.
 
-The north rule names "bloom/cuckoo URL-seen"; ``operators/dedup.py`` is
-the Bloom arm, this module is the cuckoo arm (Fan et al., "Cuckoo
-Filter: Practically Better Than Bloom", CoNEXT 2014) behind the SAME
-three-name contract the engine consumes (``FILTER_STATE_SCHEMA``,
-``update_seen_filters``, ``anti_join_seen_with_delta``), so
-``CrawlConfig(filter_kind="cuckoo")`` swaps the state kind with no
-other engine change.  Semantics are identical by construction — the
-filter is only a prefilter; "maybe seen" survivors always go through
-the exact ``left_anti`` join (north_rule: "identical URL-seen set"),
-and the equivalence is pinned by the same test battery as the Bloom.
+The north rule names "bloom/cuckoo URL-seen"; ``operators/dedup.py``
+holds the one filter path (state schema, cogroup fold and probe,
+seen-part pruning, same-round-delta anti-join) and the Bloom codec.
+This module is the cuckoo codec (Fan et al., "Cuckoo Filter:
+Practically Better Than Bloom", CoNEXT 2014) bound to that path under
+the SAME names the engine consumes (``FILTER_STATE_SCHEMA``,
+``update_seen_filters``, ``anti_join_seen_partitioned``,
+``anti_join_seen_with_delta``), so ``CrawlConfig(filter_kind="cuckoo")``
+swaps the state kind with no other engine change.  Semantics are
+identical by construction — the filter is only a prefilter; "maybe
+seen" survivors always go through the exact ``left_anti`` join
+(north_rule: "identical URL-seen set").
 
-What the cuckoo arm adds over Bloom:
+What the cuckoo kind adds over Bloom:
 
 - **deletion** (``delete_keys``): a recrawl scheduler can un-see a
   stale URL so the next round re-fetches it, WITHOUT rebuilding the
@@ -27,49 +29,36 @@ Layout per (part_id, epoch): ``table`` is an (n_buckets × 4) uint16
 array (0 = empty; fingerprints are remapped to be nonzero),
 n_buckets a power of two.  Bucket choice uses a splitmix-style mix of
 the 64-bit url_hash — NOT the raw low bits, which are constant within
-a partition (part_id = hash mod n_parts uses them).  Epoch overflow
-mirrors the Bloom arm: when an epoch is full (or an insert exceeds
-MAX_KICKS evictions), leftovers open a fresh epoch sized 2× the batch
-— geometric growth, O(log) epochs, no rebuilds.  Inserts sort the
-key batch first so the table bytes are deterministic for a given key
-set (checkpoint-resume byte-stability; lookups don't depend on it).
+a partition (part_id = hash mod n_parts uses them).  An insert can
+leave leftovers (an epoch is full, or a key exceeds MAX_KICKS
+evictions); the shared fold opens a fresh 2×-sized epoch for them.
+The fold sorts the key batch first, so the table bytes are
+deterministic for a given key set.
 
-Membership probe is fully vectorized numpy (two gathers + compare)
-inside the same cogroup-by-part_id plan as the Bloom arm: candidates
-shuffle once on part_id to meet their partition's epoch tables; blobs
-never collect to the driver.  Insert/delete walk keys in a Python
-loop, but only over the per-round DELTA within one partition task —
-the probe (every round × every candidate) is the hot path, not the
-fold.  Reference analogue: the seen set is the reference's
-``INSERT ... ON CONFLICT DO NOTHING`` (commons/Entry.go:37).
+The membership probe is fully vectorized numpy (two gathers + compare).
+Insert/delete walk residual keys in a Python loop, but only over the
+per-round DELTA within one partition task — the probe (every round ×
+every candidate) is the hot path, not the fold.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .dedup import part_id_col
-
-FILTER_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("epoch", T.IntegerType(), False),
-        T.StructField("filter", T.BinaryType(), False),  # uint16 (m,4) table
-        T.StructField("n_keys", T.LongType(), False),
-        T.StructField("capacity", T.LongType(), False),
-        T.StructField("n_parts", T.IntegerType(), True),
-    ]
+from .dedup import (
+    FILTER_STATE_SCHEMA,  # noqa: F401 — same state contract as the Bloom kind
+    Codec,
+    cogroup_state,
+    fold_filter_state,
+    probe_filter_state,
+    probe_filter_state_with_delta,
 )
-
-CUCKOO_STATE_SCHEMA = FILTER_STATE_SCHEMA  # descriptive alias
 
 _SLOTS = 4
 _MAX_KICKS = 500
-_MIN_CAPACITY = 4096
 _LOAD = 0.95  # target fill; 4-slot tables reliably reach ~95%
 
 
@@ -214,73 +203,17 @@ def _delete(table: np.ndarray, h: np.ndarray) -> np.ndarray:
     return deleted
 
 
-def _blob_to_table(blob: bytes) -> np.ndarray:
-    t = np.frombuffer(bytes(blob), dtype=np.uint16)
-    return t.reshape(len(t) // _SLOTS, _SLOTS).copy()
+CUCKOO = Codec(
+    empty=lambda cap: np.zeros((_n_buckets_for(cap), _SLOTS), dtype=np.uint16),
+    load=lambda blob: np.frombuffer(bytearray(blob), dtype=np.uint16).reshape(-1, _SLOTS),
+    dump=lambda table: table.tobytes(),
+    insert=_insert_with_undo,
+    lookup=_lookup,
+)
 
-
-_STATE_COLS = [f.name for f in FILTER_STATE_SCHEMA.fields]
-
-
-def update_seen_filters(
-    filters_prev: DataFrame,
-    new_seen: DataFrame,
-    n_parts: int = 64,
-) -> DataFrame:
-    """Fold this round's new keys into the cuckoo state (REWRITE
-    semantics, same contract as ``dedup.update_seen_filters``).
-    Epochs under a different ``n_parts`` are dropped — the engine
-    refolds the full seen set on config change, exactly as for Bloom.
-    """
-
-    def fold(key, blobs: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
-        part = int(key[0])
-        rows = blobs.sort_values("epoch").to_dict("records") if len(blobs) else []
-        h = keys["url_hash"].to_numpy(dtype=np.int64) if len(keys) else np.array([], np.int64)
-        h = np.sort(h)  # deterministic table bytes for a given key set
-        if len(h):
-            pending = h
-            if rows:
-                cur = rows[-1]
-                room = int(cur["capacity"]) - int(cur["n_keys"])
-                if room > 0:
-                    take, pending = pending[:room], pending[room:]
-                    table = _blob_to_table(cur["filter"])
-                    left = _insert_with_undo(table, take)
-                    cur["filter"] = table.tobytes()
-                    cur["n_keys"] = int(cur["n_keys"]) + int((~left).sum())
-                    if left.any():
-                        pending = np.concatenate([take[left], pending])
-            while len(pending):
-                cap = max(_MIN_CAPACITY, 2 * len(pending))
-                m = _n_buckets_for(cap)
-                table = np.zeros((m, _SLOTS), dtype=np.uint16)
-                left = _insert_with_undo(table, pending)
-                rows.append(
-                    {
-                        "part_id": part,
-                        "epoch": (int(rows[-1]["epoch"]) + 1) if rows else 0,
-                        "filter": table.tobytes(),
-                        "n_keys": int((~left).sum()),
-                        "capacity": cap,
-                        "n_parts": n_parts,
-                    }
-                )
-                if left.all():  # fresh 2×-sized epoch must make progress
-                    raise RuntimeError(
-                        f"cuckoo epoch insert made no progress (part {part}, "
-                        f"{len(pending)} keys, {m} buckets)"
-                    )
-                pending = pending[left]  # geometric epochs: terminates
-        return pd.DataFrame(rows, columns=_STATE_COLS)
-
-    prev_k = filters_prev.filter(F.col("n_parts") == F.lit(n_parts)).groupBy("part_id")
-    new_k = (
-        new_seen.select("url_hash")
-        .withColumn("part_id", part_id_col("url_hash", n_parts))
-        .groupBy("part_id")
-    )
-    return prev_k.cogroup(new_k).applyInPandas(fold, schema=FILTER_STATE_SCHEMA)
+update_seen_filters = partial(fold_filter_state, CUCKOO)
+anti_join_seen_partitioned = partial(probe_filter_state, CUCKOO)
+anti_join_seen_with_delta = partial(probe_filter_state_with_delta, CUCKOO)
 
 
 def delete_keys(
@@ -289,113 +222,23 @@ def delete_keys(
     n_parts: int = 64,
 ) -> DataFrame:
     """Un-see keys (recrawl invalidation): remove one fingerprint copy
-    per key, newest epoch first.  The Bloom arm has no counterpart —
+    per key, newest epoch first.  The Bloom kind has no counterpart —
     this is the operation that motivates the cuckoo kind.  Only keys
     actually inserted may be deleted (standard cuckoo-filter contract);
     the engine guarantees that by deleting from the exact seen table in
     the same commit."""
 
-    def fold(key, blobs: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
-        rows = blobs.sort_values("epoch").to_dict("records") if len(blobs) else []
-        h = keys["url_hash"].to_numpy(dtype=np.int64) if len(keys) else np.array([], np.int64)
-        if len(h) and rows:
-            remaining = np.unique(h)
-            for cur in reversed(rows):  # newest epoch first
-                if not len(remaining):
-                    break
-                table = _blob_to_table(cur["filter"])
-                deleted = _delete(table, remaining)
-                if deleted.any():
-                    cur["filter"] = table.tobytes()
-                    cur["n_keys"] = max(0, int(cur["n_keys"]) - int(deleted.sum()))
-                    remaining = remaining[~deleted]
-        return pd.DataFrame(rows, columns=_STATE_COLS)
+    def step(part: int, rows: list, h: np.ndarray) -> list:
+        remaining = np.unique(h)
+        for cur in reversed(rows):  # newest epoch first
+            if not len(remaining):
+                break
+            table = CUCKOO.load(cur["filter"])
+            deleted = _delete(table, remaining)
+            if deleted.any():
+                cur["filter"] = CUCKOO.dump(table)
+                cur["n_keys"] = max(0, int(cur["n_keys"]) - int(deleted.sum()))
+                remaining = remaining[~deleted]
+        return rows
 
-    prev_k = filters_state.groupBy("part_id")
-    del_k = (
-        del_keys.select("url_hash")
-        .withColumn("part_id", part_id_col("url_hash", n_parts))
-        .groupBy("part_id")
-    )
-    return prev_k.cogroup(del_k).applyInPandas(fold, schema=FILTER_STATE_SCHEMA)
-
-
-def anti_join_seen_partitioned(
-    candidates: DataFrame,
-    seen: DataFrame,
-    filters_state: DataFrame,
-    n_parts: int = 64,
-    prune_seen_parts: bool = False,
-    unpersist_into: list | None = None,
-) -> DataFrame:
-    """candidates \\ seen — exact, cuckoo-prefiltered; identical plan
-    shape and conservative-default semantics as the Bloom arm."""
-    filters_state = filters_state.filter(F.col("n_parts") == F.lit(n_parts))
-    out_schema = T.StructType(
-        list(candidates.schema.fields) + [T.StructField("_maybe", T.BooleanType(), False)]
-    )
-    cand_cols = [f.name for f in candidates.schema.fields]
-
-    def probe(key, cands: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
-        if not len(cands):
-            return pd.DataFrame(columns=cand_cols + ["_maybe"])
-        out = cands[cand_cols].copy()
-        if not len(blobs):
-            # absent/partial state is NOT "nothing seen" — degrade to the
-            # exact anti-join (same conservative default as the Bloom arm)
-            out["_maybe"] = True
-            return out
-        h = cands["url_hash"].to_numpy(dtype=np.int64)
-        maybe = np.zeros(len(h), dtype=bool)
-        for blob in blobs["filter"]:
-            t = np.frombuffer(bytes(blob), dtype=np.uint16)
-            maybe |= _lookup(t.reshape(len(t) // _SLOTS, _SLOTS), h)
-        out["_maybe"] = maybe
-        return out
-
-    cand_k = candidates.withColumn("part_id", part_id_col("url_hash", n_parts)).groupBy(
-        "part_id"
-    )
-    flagged = cand_k.cogroup(filters_state.groupBy("part_id")).applyInPandas(
-        probe, schema=out_schema
-    )
-    pruning = prune_seen_parts and "seen_part" in seen.columns
-    if pruning:
-        # persist: the prune's eager part-list collect would otherwise
-        # run the probe once for the list and again for the anti-join;
-        # the persisted frame registers with the caller's unpersist
-        # list at persist time (same explicit hand-off as the Bloom arm)
-        flagged = flagged.persist()
-        if unpersist_into is not None:
-            unpersist_into.append(flagged)
-    definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    needs_check = flagged.filter(F.col("_maybe")).drop("_maybe")
-    seen_keys = seen
-    if pruning:
-        from .dedup import prune_seen_to_maybe_parts
-
-        seen_keys = prune_seen_to_maybe_parts(seen, needs_check, n_parts)
-    checked = needs_check.join(
-        seen_keys.select("url_hash"), "url_hash", "left_anti"
-    )
-    return definitely_new.unionByName(checked)
-
-
-def anti_join_seen_with_delta(
-    candidates: DataFrame,
-    seen_prev: DataFrame,
-    new_seen: DataFrame,
-    filters_state: DataFrame,
-    n_parts: int = 64,
-    prune_seen_parts: bool = False,
-    unpersist_into: list | None = None,
-) -> DataFrame:
-    """candidates \\ (seen_prev ∪ new_seen) — the filter covers only
-    seen_prev; the one-round delta gets its own exact anti-join (the
-    round-1 delta-blindspot fix, shared semantics with the Bloom arm).
-    """
-    base = anti_join_seen_partitioned(
-        candidates, seen_prev, filters_state, n_parts, prune_seen_parts,
-        unpersist_into=unpersist_into,
-    )
-    return base.join(new_seen.select("url_hash"), "url_hash", "left_anti")
+    return cogroup_state(filters_state, del_keys, n_parts, step)

@@ -177,9 +177,7 @@ def verify_rows(
       the UDF's *byte input* (``WHEN cond THEN bytes``), so skipped
       rows ship a NULL through Arrow instead of their payload —
       compute AND transfer drop by ~the sampling factor.
-    - ``"off"``: schema-stable NULL columns, no UDF at all (distinct
-      from the engine's ``verify_rows=False`` which omits the columns
-      entirely).
+    - ``"off"``: schema-stable NULL columns, no UDF at all.
 
     Implemented as a SCALAR pandas UDF returning a (psnr, ok) struct —
     not ``mapInPandas`` — deliberately: a mapInPandas pass ships the

@@ -124,7 +124,7 @@ RESULTS = T.StructType(
         T.StructField("rooms_digits", T.StringType(), True),
         T.StructField("total_price_digits", T.StringType(), True),
         T.StructField("link", T.StringType(), True),
-        # verify_rows gate (engine cfg.verify_rows, input_hint invariant)
+        # verify_rows gate (engine cfg.verify_policy, input_hint invariant)
         T.StructField("psnr_db", T.DoubleType(), True),
         T.StructField("phash_ok", T.BooleanType(), True),
     ]

@@ -224,28 +224,40 @@ def test_single_seed_reference_mode(spark, fixture_paths, tmp_path):
     assert seen == g.seen
 
 
-def test_bloom_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden):
-    """Engine with the incremental partitioned-filter prefilter engaged
-    from round 1 (bloom_min_keys=1) produces the identical dispatch log
-    and URL-seen set — the prefilter may never change semantics."""
+def _check_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden, kind):
+    """Engine with the incremental partitioned-filter prefilter of
+    ``kind`` engaged from round 1 (bloom_min_keys=1) produces the
+    identical dispatch log and URL-seen set as the default run — the
+    north rule names "bloom/cuckoo URL-seen", and the prefilter may
+    never change semantics."""
+    from crawler_spark.operators import dedup as D
+
     full_store, _ = full_run
     cfg = CrawlConfig(
         base_budget=BUDGET,
         max_rounds=MAX_ROUNDS,
+        filter_kind=kind,
         bloom_min_keys=1,
         bloom_parts=8,
         # tight compaction cadence: exercises base+delta reconstruction
         # across several compaction boundaries in one equivalence run
         frontier_compact_every=3,
     )
-    store, engine = _make_engine(spark, fixture_paths, str(tmp_path / "bloom"), cfg)
+    store, engine = _make_engine(spark, fixture_paths, str(tmp_path / kind), cfg)
     engine.run(spark.read.parquet(fixture_paths["seeds"]))
     assert _spark_outputs(store) == _spark_outputs(full_store)
     # the filter state is actually maintained
-    import crawler_spark.operators.dedup as D
     st = store.read("seen_filters", D.FILTER_STATE_SCHEMA, rewrite=True)
     assert st.count() > 0
     assert sum(r["n_keys"] for r in st.collect()) == len(golden.seen)
+
+
+def test_bloom_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden):
+    _check_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden, "bloom")
+
+
+def test_cuckoo_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden):
+    _check_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden, "cuckoo")
 
 
 def test_steady_rounds_never_read_tail(spark, fixture_paths, tmp_path, monkeypatch):
@@ -311,29 +323,6 @@ def test_checkpoint_resume_equivalence(spark, fixture_paths, tmp_path, full_run)
     engine2.run(resume=True)
     assert _spark_outputs(store) == _spark_outputs(full_store)
     assert store.read("results").count() == full_store.read("results").count()
-
-
-def test_cuckoo_filter_path_equivalence(spark, fixture_paths, tmp_path, full_run, golden):
-    """filter_kind="cuckoo" engaged from round 1 produces the identical
-    dispatch log and URL-seen set as the default run — the north rule
-    names "bloom/cuckoo URL-seen" and both arms are exact-verified."""
-    full_store, _ = full_run
-    cfg = CrawlConfig(
-        base_budget=BUDGET,
-        max_rounds=MAX_ROUNDS,
-        filter_kind="cuckoo",
-        bloom_min_keys=1,
-        bloom_parts=8,
-        frontier_compact_every=3,
-    )
-    store, engine = _make_engine(spark, fixture_paths, str(tmp_path / "cuckoo"), cfg)
-    engine.run(spark.read.parquet(fixture_paths["seeds"]))
-    assert _spark_outputs(store) == _spark_outputs(full_store)
-    from crawler_spark.operators import dedup_cuckoo as DC
-
-    st = store.read("seen_filters", DC.FILTER_STATE_SCHEMA, rewrite=True)
-    assert st.count() > 0
-    assert sum(r["n_keys"] for r in st.collect()) == len(golden.seen)
 
 
 def test_filter_kind_switch_rebuilds_state(spark, fixture_paths, tmp_path, full_run):

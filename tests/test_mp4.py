@@ -354,3 +354,44 @@ def test_avi_roundtrip_and_corrupt():
         AV.video_track(bytes(bad))
     with pytest.raises(NotImplementedError):
         AV.decode_frame(data, t.frames[0])
+
+
+def _avi(movi_payload: bytes, height: int = 10, idx1: bytes = b"") -> bytes:
+    """Hand-built single-video-stream AVI (20 px wide, MJPG, 4 fps)."""
+    from crawler_spark import avi as AV
+
+    strh = AV._chunk(
+        b"strh",
+        b"vids" + b"MJPG"
+        + struct.pack("<IHHIIIIIIIi4H", 0, 0, 0, 0, 1, 4, 0, 0, 0, 0, 0, 0, 0, 20, 10),
+    )
+    strf = AV._chunk(
+        b"strf", struct.pack("<IiiHH4sIiiII", 40, 20, height, 1, 24, b"MJPG", 0, 0, 0, 0, 0)
+    )
+    hdrl = AV._list(b"hdrl", AV._chunk(b"avih", bytes(56)) + AV._list(b"strl", strh + strf))
+    payload = b"AVI " + hdrl + AV._list(b"movi", movi_payload) + idx1
+    return b"RIFF" + struct.pack("<I", len(payload)) + payload
+
+
+def test_avi_top_down_dib_height():
+    """BITMAPINFOHEADER biHeight is signed: a negative value marks a
+    top-down DIB and the frame height is its magnitude."""
+    from crawler_spark import avi as AV
+
+    t = AV.video_track(_avi(AV._chunk(b"00dc", b"frame"), height=-10))
+    assert (t.width, t.height) == (20, 10)
+
+
+def test_avi_rec_lists_demux_every_frame():
+    """Frames grouped in 'rec ' LIST chunks inside movi (the spec's
+    interleave grouping) are demuxed, also without an idx1 index."""
+    from crawler_spark import avi as AV
+
+    frames = _payloads(5, base=3)
+    movi = AV._list(b"rec ", AV._chunk(b"00dc", frames[0]) + AV._chunk(b"01wb", b"pcm"))
+    movi += AV._chunk(b"00dc", frames[1])
+    movi += AV._list(b"rec ", b"".join(AV._chunk(b"00dc", f) for f in frames[2:]))
+    data = _avi(movi)
+    t = AV.video_track(data)
+    assert [AV.frame_payload(data, f) for f in t.frames] == frames
+    assert all(f.is_sync for f in t.frames)

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from crawler_spark.operators import dedup as D
+from crawler_spark.operators import dedup_cuckoo as DC
 from crawler_spark.operators import extract as E
 from crawler_spark.operators import politeness as P
 from crawler_spark.operators import robots as R
@@ -139,13 +141,15 @@ def test_bloom_anti_join_equivalence(spark):
     cands = spark.range(0, 5000).select(
         F.col("id").alias("url_hash"), (F.col("id") * 10).alias("payload")
     )
-    exact = D.anti_join_seen(cands, seen, None)
-    filters = D.build_seen_filters(seen, n_parts=8)
-    assert filters.count() == 4  # seen hashes are all even → 4 of 8 partitions
-    with_bloom = D.anti_join_seen(cands, seen, filters, n_parts=8)
-    a = sorted(r["url_hash"] for r in exact.collect())
-    b = sorted(r["url_hash"] for r in with_bloom.collect())
-    assert a == b == list(range(1, 5000, 2))
+    state = D.update_seen_filters(
+        spark.createDataFrame([], D.FILTER_STATE_SCHEMA), seen, n_parts=8
+    )
+    assert state.count() == 4  # seen hashes are all even → 4 of 8 partitions
+    exact = sorted(r["url_hash"] for r in D.anti_join_seen(cands, seen, None).collect())
+    with_bloom = sorted(
+        r["url_hash"] for r in D.anti_join_seen(cands, seen, state, n_parts=8).collect()
+    )
+    assert exact == with_bloom == list(range(1, 5000, 2))
 
 
 # ---- G3/G5: live-web fetch path with in-batch retry (fake fetcher)
@@ -189,16 +193,19 @@ def test_fetch_http_map_retries(spark):
     assert rows["udead"]["error"] == "always down"
 
 
-# ---- incremental partitioned filter state ≡ exact anti-join
-def test_incremental_filter_state_equivalence(spark):
-    state = spark.createDataFrame([], D.FILTER_STATE_SCHEMA)
+# ---- the partitioned filter battery, one body per check for both
+# codecs of the shared filter path (D = Bloom, DC = cuckoo); each check
+# keeps one named test per kind
+def _check_incremental_state_equivalence(spark, M):
+    """incremental partitioned filter state ≡ exact anti-join"""
+    state = spark.createDataFrame([], M.FILTER_STATE_SCHEMA)
     seen_batches = [
         spark.range(0, 3000, 3).select(F.col("id").alias("url_hash")),
         spark.range(1, 3000, 3).select(F.col("id").alias("url_hash")),
     ]
     seen_all = seen_batches[0].unionByName(seen_batches[1])
     for b in seen_batches:
-        state = D.update_seen_filters(state, b, n_parts=8)
+        state = M.update_seen_filters(state, b, n_parts=8)
     state = state.persist()
     # epochs grew without rebuild; every partition has state
     assert state.count() >= 8
@@ -207,34 +214,51 @@ def test_incremental_filter_state_equivalence(spark):
     )
     got = sorted(
         r["url_hash"]
-        for r in D.anti_join_seen_partitioned(cands, seen_all, state, n_parts=8).collect()
+        for r in M.anti_join_seen_partitioned(cands, seen_all, state, n_parts=8).collect()
     )
     assert got == list(range(2, 3000, 3))
     state.unpersist()
 
 
-# ---- filter capacity overflow appends epochs (no rebuild, no loss)
-def test_filter_state_epoch_growth(spark):
-    state = spark.createDataFrame([], D.FILTER_STATE_SCHEMA)
+def test_incremental_filter_state_equivalence(spark):
+    _check_incremental_state_equivalence(spark, D)
+
+
+def test_cuckoo_incremental_state_equivalence(spark):
+    _check_incremental_state_equivalence(spark, DC)
+
+
+def _check_epoch_growth(spark, M):
+    """capacity overflow appends epochs (no rebuild, no loss)"""
+    state = spark.createDataFrame([], M.FILTER_STATE_SCHEMA)
     for lo in range(0, 30000, 10000):
         batch = spark.range(lo, lo + 10000).select(F.col("id").alias("url_hash"))
-        state = D.update_seen_filters(state, batch, n_parts=2).persist()
+        state = M.update_seen_filters(state, batch, n_parts=2).persist()
         state.count()
     rows = state.collect()
     assert {r["part_id"] for r in rows} == {0, 1}
     assert sum(r["n_keys"] for r in rows) == 30000
     seen = spark.range(0, 30000).select(F.col("id").alias("url_hash"))
     cands = spark.range(0, 40000).select(F.col("id").alias("url_hash"))
-    got = D.anti_join_seen_partitioned(cands, seen, state, n_parts=2).count()
+    got = M.anti_join_seen_partitioned(cands, seen, state, n_parts=2).count()
     assert got == 10000
+    state.unpersist()
 
 
-# ---- same-round collision: a candidate first seen THIS round must be
-# dropped even though the persisted filter blobs don't cover it yet
-def test_same_round_collision_not_refetched(spark):
+def test_filter_state_epoch_growth(spark):
+    _check_epoch_growth(spark, D)
+
+
+def test_cuckoo_epoch_growth(spark):
+    _check_epoch_growth(spark, DC)
+
+
+def _check_same_round_collision(spark, M):
+    """a candidate first seen THIS round must be dropped even though the
+    persisted filter blobs don't cover it yet"""
     seen_prev = spark.range(0, 1000, 2).select(F.col("id").alias("url_hash"))
-    state = D.update_seen_filters(
-        spark.createDataFrame([], D.FILTER_STATE_SCHEMA), seen_prev, n_parts=4
+    state = M.update_seen_filters(
+        spark.createDataFrame([], M.FILTER_STATE_SCHEMA), seen_prev, n_parts=4
     ).persist()
     state.count()
     # this round fetched 1001/1003/1005 — NOT in seen_prev, NOT in blobs
@@ -245,7 +269,7 @@ def test_same_round_collision_not_refetched(spark):
     ).withColumn("payload", F.col("url_hash") * 2)
     got = sorted(
         r["url_hash"]
-        for r in D.anti_join_seen_with_delta(
+        for r in M.anti_join_seen_with_delta(
             cands, seen_prev, new_seen, state, n_parts=4
         ).collect()
     )
@@ -253,26 +277,66 @@ def test_same_round_collision_not_refetched(spark):
     state.unpersist()
 
 
-# ---- absent/partial filter state degrades to the exact anti-join
-# (conservative probe default), never to "skip dedup"
-def test_absent_filter_state_degrades_to_exact(spark):
+def test_same_round_collision_not_refetched(spark):
+    _check_same_round_collision(spark, D)
+
+
+def test_cuckoo_same_round_collision_not_refetched(spark):
+    _check_same_round_collision(spark, DC)
+
+
+def _check_absent_state_degrades_to_exact(spark, M):
+    """absent/partial filter state degrades to the exact anti-join
+    (conservative probe default), never to "skip dedup"."""
     seen = spark.range(0, 100).select(F.col("id").alias("url_hash"))
     cands = spark.range(0, 200).select(F.col("id").alias("url_hash"))
-    empty_state = spark.createDataFrame([], D.FILTER_STATE_SCHEMA)
+    empty_state = spark.createDataFrame([], M.FILTER_STATE_SCHEMA)
     got = sorted(
         r["url_hash"]
-        for r in D.anti_join_seen_partitioned(cands, seen, empty_state, n_parts=4).collect()
+        for r in M.anti_join_seen_partitioned(cands, seen, empty_state, n_parts=4).collect()
     )
     assert got == list(range(100, 200))
     # partial state: blobs exist for only one of 4 partitions
-    partial = D.update_seen_filters(
+    partial = M.update_seen_filters(
         empty_state, seen.filter(F.pmod("url_hash", F.lit(4)) == 0), n_parts=4
     )
     got = sorted(
         r["url_hash"]
-        for r in D.anti_join_seen_partitioned(cands, seen, partial, n_parts=4).collect()
+        for r in M.anti_join_seen_partitioned(cands, seen, partial, n_parts=4).collect()
     )
     assert got == list(range(100, 200))
+
+
+def test_absent_filter_state_degrades_to_exact(spark):
+    _check_absent_state_degrades_to_exact(spark, D)
+
+
+def test_cuckoo_absent_state_degrades_to_exact(spark):
+    _check_absent_state_degrades_to_exact(spark, DC)
+
+
+def _check_nparts_mismatch_degrades_to_exact(spark, M):
+    """state built under another n_parts is ignored by the probe"""
+    seen = spark.range(0, 100).select(F.col("id").alias("url_hash"))
+    cands = spark.range(0, 200).select(F.col("id").alias("url_hash"))
+    state8 = M.update_seen_filters(
+        spark.createDataFrame([], M.FILTER_STATE_SCHEMA), seen, n_parts=8
+    ).persist()
+    state8.count()
+    got = sorted(
+        r["url_hash"]
+        for r in M.anti_join_seen_partitioned(cands, seen, state8, n_parts=4).collect()
+    )
+    assert got == list(range(100, 200))
+    state8.unpersist()
+
+
+def test_nparts_mismatch_degrades_to_exact(spark):
+    _check_nparts_mismatch_degrades_to_exact(spark, D)
+
+
+def test_cuckoo_nparts_mismatch_degrades_to_exact(spark):
+    _check_nparts_mismatch_degrades_to_exact(spark, DC)
 
 
 # ---- deterministic global sequence, partition-invariant
@@ -483,106 +547,9 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 # =====================================================================
-# Cuckoo-filter seen-set arm (operators/dedup_cuckoo.py) — the same
-# battery as the Bloom arm above, plus deletion (the cuckoo-only op)
+# Cuckoo-only checks (operators/dedup_cuckoo.py): deletion and the
+# kernel; the shared filter battery above covers both kinds
 # =====================================================================
-import numpy as np
-
-from crawler_spark.operators import dedup_cuckoo as DC
-
-
-def test_cuckoo_incremental_state_equivalence(spark):
-    state = spark.createDataFrame([], DC.FILTER_STATE_SCHEMA)
-    seen_batches = [
-        spark.range(0, 3000, 3).select(F.col("id").alias("url_hash")),
-        spark.range(1, 3000, 3).select(F.col("id").alias("url_hash")),
-    ]
-    seen_all = seen_batches[0].unionByName(seen_batches[1])
-    for b in seen_batches:
-        state = DC.update_seen_filters(state, b, n_parts=8)
-    state = state.persist()
-    assert state.count() >= 8
-    cands = spark.range(0, 3000).select(
-        F.col("id").alias("url_hash"), (F.col("id") * 7).alias("payload")
-    )
-    got = sorted(
-        r["url_hash"]
-        for r in DC.anti_join_seen_partitioned(cands, seen_all, state, n_parts=8).collect()
-    )
-    assert got == list(range(2, 3000, 3))
-    state.unpersist()
-
-
-def test_cuckoo_epoch_growth(spark):
-    state = spark.createDataFrame([], DC.FILTER_STATE_SCHEMA)
-    for lo in range(0, 30000, 10000):
-        batch = spark.range(lo, lo + 10000).select(F.col("id").alias("url_hash"))
-        state = DC.update_seen_filters(state, batch, n_parts=2).persist()
-        state.count()
-    rows = state.collect()
-    assert {r["part_id"] for r in rows} == {0, 1}
-    assert sum(r["n_keys"] for r in rows) == 30000
-    seen = spark.range(0, 30000).select(F.col("id").alias("url_hash"))
-    cands = spark.range(0, 40000).select(F.col("id").alias("url_hash"))
-    got = DC.anti_join_seen_partitioned(cands, seen, state, n_parts=2).count()
-    assert got == 10000
-    state.unpersist()
-
-
-def test_cuckoo_same_round_collision_not_refetched(spark):
-    seen_prev = spark.range(0, 1000, 2).select(F.col("id").alias("url_hash"))
-    state = DC.update_seen_filters(
-        spark.createDataFrame([], DC.FILTER_STATE_SCHEMA), seen_prev, n_parts=4
-    ).persist()
-    state.count()
-    new_seen = spark.createDataFrame([(1001,), (1003,), (1005,)], "url_hash: long")
-    cands = spark.createDataFrame(
-        [(1001,), (1003,), (4,), (7,)], "url_hash: long"
-    ).withColumn("payload", F.col("url_hash") * 2)
-    got = sorted(
-        r["url_hash"]
-        for r in DC.anti_join_seen_with_delta(
-            cands, seen_prev, new_seen, state, n_parts=4
-        ).collect()
-    )
-    assert got == [7]
-    state.unpersist()
-
-
-def test_cuckoo_absent_state_degrades_to_exact(spark):
-    seen = spark.range(0, 100).select(F.col("id").alias("url_hash"))
-    cands = spark.range(0, 200).select(F.col("id").alias("url_hash"))
-    empty_state = spark.createDataFrame([], DC.FILTER_STATE_SCHEMA)
-    got = sorted(
-        r["url_hash"]
-        for r in DC.anti_join_seen_partitioned(cands, seen, empty_state, n_parts=4).collect()
-    )
-    assert got == list(range(100, 200))
-    partial = DC.update_seen_filters(
-        empty_state, seen.filter(F.pmod("url_hash", F.lit(4)) == 0), n_parts=4
-    )
-    got = sorted(
-        r["url_hash"]
-        for r in DC.anti_join_seen_partitioned(cands, seen, partial, n_parts=4).collect()
-    )
-    assert got == list(range(100, 200))
-
-
-def test_cuckoo_nparts_mismatch_degrades_to_exact(spark):
-    seen = spark.range(0, 100).select(F.col("id").alias("url_hash"))
-    cands = spark.range(0, 200).select(F.col("id").alias("url_hash"))
-    state8 = DC.update_seen_filters(
-        spark.createDataFrame([], DC.FILTER_STATE_SCHEMA), seen, n_parts=8
-    ).persist()
-    state8.count()
-    got = sorted(
-        r["url_hash"]
-        for r in DC.anti_join_seen_partitioned(cands, seen, state8, n_parts=4).collect()
-    )
-    assert got == list(range(100, 200))
-    state8.unpersist()
-
-
 def test_cuckoo_delete_unsees_keys(spark):
     """The cuckoo-only operation: delete stale keys from the filter AND
     the exact seen table (recrawl invalidation) — those candidates come
@@ -786,30 +753,6 @@ def test_pruned_anti_join_registers_probe_cache_for_unpersist(spark):
         assert sorted(r["url_hash"] for r in out.collect()) == list(range(1, 200, 2))
         for df in registry:
             df.unpersist()
-
-
-def test_anti_join_collect_arm_gated_at_scale(spark, monkeypatch):
-    """VERDICT r3 item 6: above the broadcast-bytes cap the bootstrap
-    collect arm must route through the executor-side cogroup probe —
-    same exact result, no driver blob collect.  Forcing the cap to 0
-    exercises the gated path on the small fixture."""
-    from pyspark.sql import functions as F
-
-    from crawler_spark.operators import dedup as D
-
-    seen = spark.range(0, 300, 3).select(F.col("id").alias("url_hash"))
-    cands = spark.range(0, 300).select(F.col("id").alias("url_hash"))
-    filters = D.build_seen_filters(seen, n_parts=8)
-    expected = sorted(
-        r["url_hash"]
-        for r in D.anti_join_seen(cands, seen, None).collect()
-    )
-    monkeypatch.setattr(D, "_BROADCAST_BLOBS_MAX_BYTES", 0)
-    gated = sorted(
-        r["url_hash"]
-        for r in D.anti_join_seen(cands, seen, filters, n_parts=8).collect()
-    )
-    assert gated == expected
 
 
 def test_verify_rows_policy_knob(spark):
